@@ -44,3 +44,63 @@ def test_no_duplicate_top_level_definitions():
         tree = ast.parse(py.read_text(), filename=str(py))
         problems.extend(_duplicate_defs(tree, str(py.relative_to(PKG.parent))))
     assert not problems, "shadowed definitions:\n" + "\n".join(problems)
+
+
+def _mentions(node: ast.AST, names: set[str]) -> bool:
+    return any(isinstance(n, ast.Name) and n.id in names for n in ast.walk(node))
+
+
+def _is_batch_read(call: ast.Call) -> bool:
+    """``<x>.read[.schema(...)...].parquet(...)`` or ``.load(...)``."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr in ("parquet", "load")):
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "read":
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def _fixture_reads(tree: ast.Module, path: str) -> list[str]:
+    """Batch parquet reads whose path comes from ``sf_dir``, directly or
+    through a local name assigned from it, one scope per outermost
+    function (plus the module body)."""
+    scopes: list[list[ast.AST]] = [[]]
+    for node in tree.body:
+        if isinstance(node, ast.ClassDef):
+            scopes.extend([m] for m in node.body)
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scopes.append([node])
+        else:
+            scopes[0].append(node)
+    found = []
+    for scope in scopes:
+        nodes = [n for top in scope for n in ast.walk(top)]
+        tainted = {"sf_dir"}
+        for n in nodes:
+            if isinstance(n, ast.Assign) and _mentions(n.value, {"sf_dir"}):
+                tainted |= {t.id for t in n.targets if isinstance(t, ast.Name)}
+        for n in nodes:
+            if isinstance(n, ast.Call) and _is_batch_read(n) and any(
+                _mentions(a, tainted) for a in [*n.args, *(k.value for k in n.keywords)]
+            ):
+                found.append(f"{path}:{n.lineno} {ast.unparse(n)[:80]}")
+    return found
+
+
+def test_fixture_tables_are_read_only_through_the_reader():
+    """Fixture tables are read (and their schemas probed) through
+    ``sources.readers.read_parquet``, which infers a table's schema once
+    per session; a direct ``spark.read.parquet`` of an ``sf_dir`` path
+    elsewhere would run a footer job on every call."""
+    problems: list[str] = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = str(py.relative_to(PKG.parent))
+        if rel == "ug_dwh_etl_spark/sources/readers.py":
+            continue
+        problems.extend(_fixture_reads(ast.parse(py.read_text(), filename=str(py)), rel))
+    assert not problems, "direct fixture reads:\n" + "\n".join(problems)

@@ -1,16 +1,28 @@
-"""Source/sink tests: CSV variants, REST pagination fan-out, writers."""
+"""Source/sink tests: CSV variants, REST pagination fan-out, writers,
+the schema-caching parquet reader."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
+from conftest import SF_DIR
+from pyspark.errors import AnalysisException
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ug_dwh_etl_spark.queries import QUERIES, adhoc_sql
+from ug_dwh_etl_spark.queries.registry import read_events
 from ug_dwh_etl_spark.sinks.writers import append_history, fan_out, overwrite_snapshot
-from ug_dwh_etl_spark.sources.readers import read_csv
+from ug_dwh_etl_spark.sources.readers import read_csv, read_parquet
 from ug_dwh_etl_spark.sources.rest import paginated_ingest
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def test_read_csv_semicolon_latin1(spark, tmp_path):
@@ -407,3 +419,142 @@ def test_write_training_shards_is_range_ordered(spark, tmp_path):
         for f in sorted(os.listdir(again)) if f.startswith("part-")
     )
     assert c1 == c2
+
+
+def _jobs(spark, fn):
+    """(result of fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"reader-probe-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "count the jobs of one read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_infers_once_per_path(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).withColumn("s", F.col("id").cast("string")).write.parquet(path)
+    first, first_jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    second, second_jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    assert first_jobs >= 1  # the footer job the cache exists to skip
+    assert second_jobs == 0
+    assert second.schema == first.schema
+    # no DataFrame is shared: a self-join of two reads resolves
+    a, b = read_parquet(spark, path).alias("a"), read_parquet(spark, path).alias("b")
+    assert a.join(b, F.col("a.id") == F.col("b.id")).count() == 5
+
+
+def test_read_parquet_sees_rewrite_with_new_column(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["id"]
+    pq.write_table(pa.table({"id": [1, 2], "extra": ["x", "y"]}), path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["id", "extra"]
+    assert sorted(r.extra for r in df.collect()) == ["x", "y"]
+
+
+def test_read_parquet_sees_appended_part_file(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    read_parquet(spark, path)
+    _, cached_jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    spark.range(3, 5).write.mode("append").parquet(path)
+    df, fresh_jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    assert cached_jobs == 0 and fresh_jobs >= 1  # the new part file re-infers
+    assert df.count() == 5
+
+
+def test_read_events_nanos_file_matches_micros_file(spark, tmp_path):
+    events = pq.read_table(f"{SF_DIR}/events.parquet").slice(0, 50)
+    assert events.schema.field("ts").type == pa.timestamp("us")
+    ns = events.set_column(
+        events.schema.get_field_index("ts"), "ts", events["ts"].cast(pa.timestamp("ns"))
+    )
+    (tmp_path / "us").mkdir()
+    (tmp_path / "ns").mkdir()
+    pq.write_table(events, str(tmp_path / "us" / "events.parquet"))
+    pq.write_table(ns, str(tmp_path / "ns" / "events.parquet"), version="2.6")
+    assert pq.read_schema(str(tmp_path / "ns" / "events.parquet")).field("ts").type == pa.timestamp("ns")
+    prior = spark.conf.get(NANOS_AS_LONG, None)
+    try:
+        got = {
+            layout: [(r.event_id, r.ts) for r in read_events(spark, str(tmp_path / layout))
+                     .select("event_id", "ts").orderBy("event_id").collect()]
+            for layout in ("us", "ns")
+        }
+        raw = read_parquet(spark, str(tmp_path / "ns" / "events.parquet"))
+        assert isinstance(raw.schema["ts"].dataType, LongType)
+    finally:
+        if prior is None:
+            spark.conf.unset(NANOS_AS_LONG)
+        else:
+            spark.conf.set(NANOS_AS_LONG, prior)
+    assert len(got["us"]) == 50
+    assert got["ns"] == got["us"]
+
+
+def test_read_parquet_missing_or_corrupt_raises(spark, tmp_path):
+    prior = spark.conf.get(NANOS_AS_LONG, None)
+    with pytest.raises(AnalysisException):
+        read_parquet(spark, str(tmp_path / "missing.parquet"))
+    bad = tmp_path / "bad.parquet"
+    bad.write_bytes(b"PAR1 this is not parquet")
+    with pytest.raises(Exception) as exc:
+        read_parquet(spark, str(bad))
+    assert "PARQUET_TYPE_ILLEGAL" not in str(exc.value)
+    # neither error is taken for the TIMESTAMP(NANOS) fallback
+    assert spark.conf.get(NANOS_AS_LONG, None) == prior
+
+
+def _drop_temp_views(spark):
+    for t in spark.catalog.listTables():
+        if t.isTemporary:
+            spark.catalog.dropTempView(t.name)
+
+
+@pytest.mark.parametrize("name", sorted(n for n in QUERIES if n.startswith("sql_")))
+def test_run_sql_registers_only_referenced_views(spark, monkeypatch, name):
+    _drop_temp_views(spark)
+    new = QUERIES[name].fn(spark, SF_DIR).collect()
+    registered = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert registered < set(adhoc_sql.TABLES)
+
+    def run_sql_all_views(spark, sf_dir, sql, args=None):
+        adhoc_sql.register_views(spark, sf_dir)
+        return spark.sql(sql, args=args)
+
+    monkeypatch.setattr(adhoc_sql, "run_sql", run_sql_all_views)
+    old = QUERIES[name].fn(spark, SF_DIR).collect()
+    assert sorted(map(tuple, new)) == sorted(map(tuple, old))
+
+
+_MAT_SCRIPT = """
+import os, sys
+from ug_dwh_etl_spark.queries.registry import materialize_once
+from ug_dwh_etl_spark.session import get_spark
+
+spark = get_spark("mat-cleanup", master="local[1]")
+df = materialize_once(spark, sys.argv[1], "probe", lambda: spark.range(3))
+assert df.count() == 3
+print(os.getpid(), df.inputFiles()[0])
+"""
+
+
+def test_materialize_once_removes_own_dirs_at_exit(tmp_path):
+    other = tmp_path / "mat_probe_1"  # another process's artifact
+    (other / "k").mkdir(parents=True)
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="512m")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _MAT_SCRIPT, SF_DIR], cwd=root, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    pid, artifact_file = proc.stdout.split()[-2:]
+    mine = tmp_path / f"mat_probe_{pid}"
+    assert f"{mine}/" in artifact_file  # the artifact was written there
+    assert not mine.exists()
+    assert other.is_dir()

@@ -32,6 +32,7 @@ from ug_dwh_etl_spark.functions.text import bool_label, regex_case, rlike_any
 from ug_dwh_etl_spark.functions.urls import with_url_levels
 from ug_dwh_etl_spark.plans.pipeline import Gate, Pipeline
 from ug_dwh_etl_spark.sinks.writers import append_history, overwrite_snapshot
+from ug_dwh_etl_spark.sources.readers import read_parquet
 from ug_dwh_etl_spark.sources.rest import paginated_ingest
 
 # Same deterministic URL material as queries/macros.py.
@@ -95,7 +96,7 @@ def e1_crawl_pipeline(sf_dir: str, out_dir: str | None = None) -> Pipeline:
         ]
     return Pipeline(
         name="e1_crawl",
-        load=lambda spark: spark.read.parquet(f"{sf_dir}/documents.parquet"),
+        load=lambda spark: read_parquet(spark, f"{sf_dir}/documents.parquet"),
         transform=e1_transform,
         gates=(
             # Q1 shape: the root page must be healthy (reference: root URL
@@ -196,9 +197,9 @@ def e3_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bookings stand-in: orders × first lineitem, with the price
     re-encoded as a German-locale string so the pipeline exercises the
     real parse (C10)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         .filter(F.col("l_linenumber") == 1)
         .select("l_orderkey", "l_shipdate")
     )

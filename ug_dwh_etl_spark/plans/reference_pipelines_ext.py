@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from ug_dwh_etl_spark.functions.numeric import fill_cast
 from ug_dwh_etl_spark.functions.text import bool_label, regex_case, rlike_any
 from ug_dwh_etl_spark.functions.urls import with_url_levels
+from ug_dwh_etl_spark.sources.readers import read_parquet
 
 # Same deterministic URL material as queries/macros.py / E1.
 _URL_SPARK = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(doc_id AS STRING))"
@@ -49,7 +50,7 @@ def _ext() -> F.Column:
 
 
 def _docs_with_address(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return docs.withColumn("address", F.concat(F.expr(_URL_SPARK), _ext()))
 
 
@@ -128,7 +129,7 @@ _WEBSITE_TYPE = [
 
 
 def _edge_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     return (
         li.select("l_suppkey", "l_partkey")
         .distinct()
@@ -153,7 +154,7 @@ def e6_inlinks_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension — a key-shuffled join (part scales with the fact table, so
     it is NOT broadcast; AQE may still demote at test scale)."""
     edges = _edge_urls(spark, sf_dir)
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select("p_partkey", F.col("p_name").alias("anchor"))
+    part = read_parquet(spark, f"{sf_dir}/part.parquet").select("p_partkey", F.col("p_name").alias("anchor"))
     df = edges.join(part, edges.l_partkey == part.p_partkey).drop("l_partkey", "p_partkey")
     df = df.withColumns(
         {
@@ -197,7 +198,7 @@ def e8_hreflang_issues(spark: SparkSession, sf_dir: str) -> DataFrame:
     one language is claimed by more than one page — grouped count +
     HAVING, the issue-table shape the reference passes through
     (`sf_hreflang_data.py:68-88`)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return (
         docs.withColumn("cluster", F.expr("doc_id div 7"))
         .groupBy("cluster", "lang")

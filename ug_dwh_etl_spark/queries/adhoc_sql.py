@@ -11,6 +11,8 @@ identically — SQL and DataFrame code meet in the same logical plan).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ug_dwh_etl_spark.functions.urls import url_levels_sql
@@ -29,9 +31,14 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(sql)
+def run_sql(spark: SparkSession, sf_dir: str, sql: str, args: dict | None = None) -> DataFrame:
+    """Run ``sql`` (with optional named parameters) over the fixture
+    tables. Only the tables whose names appear in the statement as whole
+    words (any case) are registered — a superset of the tables it
+    references — so a one-table query does not read all ten."""
+    used = [t for t in TABLES if re.search(rf"\b{t}\b", sql, re.IGNORECASE)]
+    register_views(spark, sf_dir, used)
+    return spark.sql(sql, args=args)
 
 
 # --- dashboard shape: daily history rollup (the reference's per-day
@@ -200,8 +207,9 @@ _MACRO_URL_DUCK = "'https://www.example.com/' || lang || '/' || source || '/p' |
 )
 def sql_macro_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_sql_macros(spark)
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         f"""
         SELECT url_root(address) AS root,
                url_directory(address) AS directory,
@@ -268,8 +276,9 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     binds as a typed literal in the plan (constant-folded, filter still
     pushed to the scan), never string concatenation. The oracle inlines
     the same literal."""
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT o_orderpriority,
                COUNT(*) AS n_big,

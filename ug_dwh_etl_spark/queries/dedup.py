@@ -1289,14 +1289,18 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs = []
     for bands, rows in _LSH_CONFIGS:
         tag = f"{bands}_{rows}"
+        # coalesce: with no candidate pair at all the sums are NULL, not 0
         aggs.append(
-            F.sum(F.when(is_cand(bands, rows), 1).otherwise(0))
+            F.coalesce(F.sum(F.when(is_cand(bands, rows), 1).otherwise(0)), F.lit(0))
             .cast("long")
             .alias(f"nc_{tag}")
         )
         aggs.append(
-            F.sum(
-                F.when(is_cand(bands, rows) & F.col("it").isNotNull(), 1).otherwise(0)
+            F.coalesce(
+                F.sum(
+                    F.when(is_cand(bands, rows) & F.col("it").isNotNull(), 1).otherwise(0)
+                ),
+                F.lit(0),
             )
             .cast("long")
             .alias(f"tp_{tag}")

@@ -658,16 +658,11 @@ def _lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.operators.graph import label_propagation
     from ug_dwh_etl_spark.queries.registry import materialize_once
 
-    return materialize_once(
-        spark,
-        sf_dir,
-        "lpa_partition",
-        lambda: label_propagation(
-            _edges(spark, sf_dir),
-            rounds=3,
-            loop_partitions=_lp(_edges(spark, sf_dir), 16),
-        ),
-    )
+    def build() -> DataFrame:
+        e = _edges(spark, sf_dir)
+        return label_propagation(e, rounds=3, loop_partitions=_lp(e, 16))
+
+    return materialize_once(spark, sf_dir, "lpa_partition", build)
 
 
 @register("graph_label_propagation", sql_label_propagation(_EDGES_SQL, rounds=3))

@@ -1063,14 +1063,14 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).alias("frequency"),
             F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("monetary"),
+            .alias("monetary_dec"),
         )
         .join(F.broadcast(ref))
         .select(
             F.datediff("ref_date", "last_order").alias("recency_days"),
             "frequency",
-            "monetary",
+            F.col("monetary_dec").cast("double").alias("monetary"),
+            "monetary_dec",
         )
     )
     cuts = rfm.agg(
@@ -1096,12 +1096,14 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             score("recency_days", "r", ascending=False).alias("r_score"),
             score("frequency", "f", ascending=True).alias("f_score"),
             score("monetary", "m", ascending=True).alias("m_score"),
-            "monetary",
+            "monetary_dec",
         )
         .groupBy("r_score", "f_score", "m_score")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.avg("monetary"), 2).alias("avg_monetary"),
+            # exact decimal mean: a double AVG's last bit depends on the
+            # shuffle partition count, which can flip the cents rounding
+            F.round(F.avg("monetary_dec"), 2).cast("double").alias("avg_monetary"),
         )
     )
 

@@ -5,10 +5,33 @@ at 100 TB inference means an extra full pass, so readers here take an
 explicit StructType whenever the source is registered, falling back to
 header-based inference for ad-hoc files. Name normalization (P7) happens
 at this boundary so everything downstream sees warehouse-convention names.
+
+Parquet tables are read through ``read_parquet`` only. Plain
+``spark.read.parquet(path)`` launches a footer-reading Spark job on every
+call, which at dashboard sizes costs more than the query's own scan. The
+first read of a path in a session runs Spark's normal inference and keeps
+the resulting StructType; later reads pass it back through
+``spark.read.schema(...)`` and launch no job. The schema is never
+hard-coded, and no DataFrame is shared between reads (a reused plan
+would make self-joins such as ``nation n1 / nation n2`` ambiguous).
+
+Cache key and invalidation: entries are kept per session (weakly, so they
+die with it) and per absolute path, together with the path's stamp:
+``(mtime_ns, size)`` of a file, or the sorted ``(relative path, mtime_ns,
+size)`` of every data file under a directory (names starting with ``.`` or
+``_`` are skipped, as Spark skips them). A read whose stamp differs from the
+cached one (a rewritten file, an appended part file) infers again. Paths
+the local filesystem cannot stat (remote URIs, globs, missing paths) are
+never cached, so Spark reports them as usual.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -60,8 +83,55 @@ def read_csv(
     return normalize_names(df) if normalize else df
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+# session -> {absolute path: (stamp, inferred StructType)}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _stamp(path: str) -> tuple | None:
+    """What a rewrite or append of ``path`` changes; None when the local
+    filesystem cannot stat it."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_mtime_ns, st.st_size)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            for name in names:
+                if not name.startswith((".", "_")):
+                    full = os.path.join(root, name)
+                    fst = os.stat(full)
+                    files.append((os.path.relpath(full, path), fst.st_mtime_ns, fst.st_size))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _infer(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet`` with the one fallback the fixtures need: a
+    TIMESTAMP(NANOS) column (pyarrow's ``timestamp[ns]``), which Spark
+    rejects unless ``nanosAsLong`` is set; it is then read as long
+    nanoseconds. Every other error (a missing or corrupt file) raises."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PARQUET_TYPE_ILLEGAL" or "TIMESTAMP(NANOS" not in str(exc):
+            raise
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(path)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan that infers the schema once per session and path
+    (module docstring: cache key and invalidation)."""
+    key, stamp = os.path.abspath(path), _stamp(path)
+    hit = _SCHEMAS.get(spark, {}).get(key)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = _infer(spark, path)
+    if stamp is not None:
+        _SCHEMAS.setdefault(spark, {})[key] = (stamp, df.schema)
+    return df
 
 
 def read_json(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
@@ -75,7 +145,7 @@ def read_json(spark: SparkSession, path: str, schema: StructType | None = None) 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     """Load the synthetic star schema from a scale-factor directory."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
+    return {name: read_parquet(spark, f"{sf_dir}/{name}.parquet") for name in names}
 
 
 def read_text(

@@ -32,33 +32,14 @@ if TYPE_CHECKING:
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.types import LongType, StructType
+
+from ug_dwh_etl_spark.sources.readers import read_parquet
 
 # Final StreamingQueryProgress of the most recent run_stream_to_memory
 # run (dict, or None before any run) — state-store row counts for
 # observability and the scale probe.
 LAST_PROGRESS: dict | None = None
 LAST_BATCH_PLAN: str | None = None
-
-
-def events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """Schema for the streaming events source, probed from the parquet
-    footer (metadata-only read — no data scan).
-
-    The fixture generator has shipped events.ts as both TIMESTAMP(NANOS)
-    (which Spark reads only as long via the nanosAsLong escape hatch)
-    and TIMESTAMP(MICROS) (native timestamp); the streaming reader needs
-    an explicit schema, so take whatever the batch footer conversion
-    yields rather than hardcoding one — same convention as
-    queries.registry.read_events."""
-    path = f"{sf_dir}/events.parquet"
-    try:
-        schema = spark.read.parquet(path).schema
-        schema["ts"]  # force resolution
-        return schema
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path).schema
 
 
 @contextlib.contextmanager
@@ -77,18 +58,19 @@ def _checkpoint_dir(explicit: str | None, prefix: str) -> Iterator[str]:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def stream_table_source(
-    spark: SparkSession, sf_dir: str, name: str, schema: StructType
-) -> DataFrame:
+def stream_table_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source stream over one fixture table, tolerant of BOTH
     parquet layouts: a single file ``{name}.parquet`` (glob-filter it out
     of the shared directory — streaming sources require a directory, so
     the file path itself can't be the source) and a Spark-written
     DIRECTORY ``{name}.parquet/part-*.parquet`` (stream the directory;
-    a leaf-name glob would silently match nothing and read 0 rows)."""
+    a leaf-name glob would silently match nothing and read 0 rows). The
+    schema is the batch reader's, so the stream and the batch twin see
+    the same types."""
     import os
 
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    schema = read_parquet(spark, path).schema
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (
@@ -100,14 +82,9 @@ def stream_table_source(
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (S1 streaming twin)."""
-    raw = stream_table_source(spark, sf_dir, "events", events_raw_schema(spark, sf_dir))
-    if isinstance(raw.schema["ts"].dataType, LongType):
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        # micros files arrive as TIMESTAMP_NTZ; watermarks require
-        # TIMESTAMP (LTZ) — identical wall-clock under the UTC session
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    from ug_dwh_etl_spark.queries.registry import normalize_event_ts
+
+    return normalize_event_ts(stream_table_source(spark, sf_dir, "events"))
 
 
 def run_stream_to_memory(
@@ -233,8 +210,7 @@ def stream_aqp_sampled_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.queries.mlfit import _AQP_DENOM, _AQP_RATE
 
     f = _AQP_RATE
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    orders = stream_table_source(spark, sf_dir, "orders", schema)
+    orders = stream_table_source(spark, sf_dir, "orders")
     u = md5_long(
         F.concat(F.col("o_orderkey").cast("string"), F.lit("|aqp"))
     ) / F.lit(_AQP_DENOM)
@@ -363,8 +339,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.operators import hashing as H
     from ug_dwh_etl_spark.operators.textstats import quality_rule_columns
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = stream_table_source(spark, sf_dir, "documents", schema)
+    raw = stream_table_source(spark, sf_dir, "documents")
     # one stateless projection per batch: tokenize once, gate + fingerprint
     toks = raw.select("doc_id", F.col("text"), H.tokens("text").alias("t"))
     keep = quality_rule_columns("t")["keep"]
@@ -548,8 +523,7 @@ def stream_language_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     team watches during a multi-day ingest."""
     import pyspark.sql.functions as F  # noqa: F811
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    raw = stream_table_source(spark, sf_dir, "documents", schema)
+    raw = stream_table_source(spark, sf_dir, "documents")
     counts = raw.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     out = run_stream_to_memory(counts, "complete")
     alpha = 0.3
@@ -600,10 +574,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is segment-cardinality, constant in stream length."""
     import pyspark.sql.functions as F  # noqa: F811
 
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    orders = stream_table_source(spark, sf_dir, "orders", schema)
+    orders = stream_table_source(spark, sf_dir, "orders")
     customer = F.broadcast(
-        spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+        read_parquet(spark, f"{sf_dir}/customer.parquet").select(
             "c_custkey", "c_mktsegment"
         )
     )
@@ -698,8 +671,7 @@ def stream_benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     look wrong."""
     import pyspark.sql.functions as F  # noqa: F811
 
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    raw = stream_table_source(spark, sf_dir, "orders", schema)
+    raw = stream_table_source(spark, sf_dir, "orders")
     digits = raw.select(
         F.substring(F.floor("o_totalprice").cast("long").cast("string"), 1, 1)
         .cast("int")
@@ -753,7 +725,6 @@ def stream_incremental_neardup(
         spread,
     )
 
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     seeded = False
     if index_root is None:
         # per-process path — same race rationale as the batch twin: a
@@ -785,7 +756,7 @@ def stream_incremental_neardup(
     bands_path = os.path.join(index_root, "bands")
     sh_path = os.path.join(index_root, "shingles")
     if not seeded:
-        corpus = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+        corpus = read_parquet(spark, f"{sf_dir}/documents.parquet").filter(
             F.col("doc_id") % 10 != 0
         )
         lsh_band_keys(corpus, "doc_id", "text").write.mode(
@@ -843,14 +814,16 @@ def stream_incremental_neardup(
         batch_bands.unpersist()
         batch_sh.unpersist()
 
-    src = stream_table_source(spark, sf_dir, "documents", docs_schema)
-    if max_files_per_trigger is not None:
-        # re-derive the source with a bounded files-per-batch so tests can
-        # force a genuine multi-micro-batch run over a split directory
+    if max_files_per_trigger is None:
+        src = stream_table_source(spark, sf_dir, "documents")
+    else:
+        # a bounded files-per-batch so tests can force a genuine
+        # multi-micro-batch run over a split directory
+        docs = f"{sf_dir.rstrip('/')}/documents.parquet"
         src = (
-            spark.readStream.schema(docs_schema)
+            spark.readStream.schema(read_parquet(spark, docs).schema)
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
+            .parquet(docs)
         )
     with _checkpoint_dir(None, "ckpt_incdedup_") as ckpt:
         q = (
@@ -889,8 +862,7 @@ def stream_semantic_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataF
     # chain, dimension columns, metric list — so an edit to the spec can
     # never desynchronize this stream from its own batch oracle
     model = FACTS[spec.fact]
-    schema = spark.read.parquet(f"{sf_dir}/{spec.fact}.parquet").schema
-    df = stream_table_source(spark, sf_dir, spec.fact, schema)
+    df = stream_table_source(spark, sf_dir, spec.fact)
     for flt in spec.filters:
         df = df.filter(F.expr(flt))
     for t in _tables_needed(spec):
@@ -924,8 +896,7 @@ def stream_semantic_trailing_window(spark: SparkSession, sf_dir: str) -> DataFra
     from pyspark.sql import Window
 
     model = FACTS[spec.fact]
-    schema = spark.read.parquet(f"{sf_dir}/{spec.fact}.parquet").schema
-    df = stream_table_source(spark, sf_dir, spec.fact, schema)
+    df = stream_table_source(spark, sf_dir, spec.fact)
     rollup = run_stream_to_memory(
         df.groupBy(*[_dim_col(spec, d).alias(d) for d in spec.dimensions]).agg(
             *[model["metrics"][m][0]().alias(m) for m in spec.metrics]
@@ -986,8 +957,7 @@ def stream_cdc_count_distinct(
         F.count(F.lit(1)).cast("long").alias("mult")
     ).write.mode("overwrite").parquet(base_path)
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = stream_table_source(spark, sf_dir, "events", schema)
+    raw = stream_table_source(spark, sf_dir, "events")
 
     def handle(batch_df: DataFrame, _bid: int) -> None:
         inserts = batch_df.filter(F.col("event_id") % 10 == 0).select(
@@ -1130,7 +1100,7 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         sfdir_key(sf_dir),
     )
     src = os.path.join(work, "src")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
         orders.repartition(8).write.mode("overwrite").parquet(src)
     table_dir = os.path.join(work, "table")
@@ -1377,7 +1347,7 @@ def stream_wap_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         sfdir_key(sf_dir),
     )
     src = os.path.join(work, "src")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
         orders.repartition(8).write.mode("overwrite").parquet(src)
     table_dir = os.path.join(work, "table")
